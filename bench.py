@@ -18,6 +18,7 @@ import math
 import os
 import sys
 import time
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -341,6 +342,84 @@ def _fixture_fingerprint(sf_dir: str) -> str:
     return h.hexdigest()[:16]
 
 
+class _Floors(NamedTuple):
+    """Per-query references from the committed records (see main)."""
+
+    cost: dict[str, float]
+    floor: dict[str, float]
+    latest: dict[str, float]
+    norm_floor: dict[str, float]
+    n_same_gen: int
+
+    def record_fields(self) -> dict:
+        """The bench record's fields about the floors.  The regression
+        flags compare only same-generation records, so with none of them
+        every flag is off: ``flags_armed`` is false."""
+        return {
+            "n_same_generation_records": self.n_same_gen,
+            "flags_armed": self.n_same_gen > 0,
+        }
+
+
+def _load_floors(
+    record_paths: list[str],
+    fixture_fp: str,
+    calibration: float,
+    calibration_streaming: float,
+) -> _Floors:
+    """Read the committed records: every record ranks query cost, only
+    records of the fixture generation ``fixture_fp`` give floors.  Says on
+    stderr when no record does, since every regression flag is then off."""
+    cost_q: dict[str, float] = {}
+    floor_q: dict[str, float] = {}
+    latest_q: dict[str, float] = {}
+    norm_floor_q: dict[str, float] = {}
+    n_same_gen = 0
+    for rp in record_paths:
+        try:
+            with open(rp) as f:
+                rec = json.load(f)
+                rec_q = dict(rec.get("queries", {}), **rec.get("extended", {}))
+                rec_cal = rec.get("calibration")
+                rec_scal = rec.get("calibration_streaming")
+        except (OSError, ValueError):
+            continue
+        same_gen = rec.get("fixture_fingerprint") == fixture_fp
+        n_same_gen += 1 if same_gen else 0
+        scale = (
+            calibration / float(rec_cal)
+            if isinstance(rec_cal, (int, float)) and rec_cal > 0
+            else None
+        )
+        scale_stream = (
+            calibration_streaming / float(rec_scal)
+            if isinstance(rec_scal, (int, float)) and rec_scal > 0
+            else scale
+        )
+        for name, b in rec_q.items():
+            if isinstance(b, (int, float)) and b > 0:
+                cost_q[name] = min(cost_q.get(name, float("inf")), float(b))
+                if not same_gen:
+                    continue
+                floor_q[name] = min(floor_q.get(name, float("inf")), float(b))
+                latest_q[name] = float(b)  # paths sorted: last wins
+                s = scale_stream if name.startswith("stream_") else scale
+                if s is not None:
+                    norm_floor_q[name] = min(
+                        norm_floor_q.get(name, float("inf")), float(b) * s
+                    )
+    if not n_same_gen:
+        print(
+            f"BENCH FLOORS: no committed record matches fixture generation "
+            f"{fixture_fp} ({len(record_paths)} records are cross-generation); "
+            f"regression flags disabled for this run — commit a "
+            f"same-generation anchor to re-arm them",
+            file=sys.stderr,
+            flush=True,
+        )
+    return _Floors(cost_q, floor_q, latest_q, norm_floor_q, n_same_gen)
+
+
 def _materialize(df) -> None:
     """Execute the full plan with every output column computed: the noop
     sink consumes all columns, so Catalyst cannot prune the payload the
@@ -611,53 +690,8 @@ def main() -> None:
     # relative expensiveness is robust across generations, and a fresh
     # generation must not collapse tier-1 to the touched set alone.
     fixture_fp = _fixture_fingerprint(sf_dir)
-    cost_q: dict[str, float] = {}
-    floor_q: dict[str, float] = {}
-    latest_q: dict[str, float] = {}
-    norm_floor_q: dict[str, float] = {}
-    n_same_gen = 0
-    for rp in record_paths:
-        try:
-            with open(rp) as f:
-                rec = json.load(f)
-                rec_q = dict(rec.get("queries", {}), **rec.get("extended", {}))
-                rec_cal = rec.get("calibration")
-                rec_scal = rec.get("calibration_streaming")
-        except (OSError, ValueError):
-            continue
-        same_gen = rec.get("fixture_fingerprint") == fixture_fp
-        n_same_gen += 1 if same_gen else 0
-        scale = (
-            calibration / float(rec_cal)
-            if isinstance(rec_cal, (int, float)) and rec_cal > 0
-            else None
-        )
-        scale_stream = (
-            calibration_streaming / float(rec_scal)
-            if isinstance(rec_scal, (int, float)) and rec_scal > 0
-            else scale
-        )
-        for name, b in rec_q.items():
-            if isinstance(b, (int, float)) and b > 0:
-                cost_q[name] = min(cost_q.get(name, float("inf")), float(b))
-                if not same_gen:
-                    continue
-                floor_q[name] = min(floor_q.get(name, float("inf")), float(b))
-                latest_q[name] = float(b)  # paths sorted: last wins
-                s = scale_stream if name.startswith("stream_") else scale
-                if s is not None:
-                    norm_floor_q[name] = min(
-                        norm_floor_q.get(name, float("inf")), float(b) * s
-                    )
-    if not n_same_gen:
-        print(
-            f"BENCH FLOORS: no committed record matches fixture generation "
-            f"{fixture_fp} ({len(record_paths)} records are cross-generation); "
-            f"regression flags disabled for this run — commit a "
-            f"same-generation anchor to re-arm them",
-            file=sys.stderr,
-            flush=True,
-        )
+    floors = _load_floors(record_paths, fixture_fp, calibration, calibration_streaming)
+    cost_q, floor_q, latest_q, norm_floor_q, _ = floors
 
     # Extended-set tier selection (r14 verdict ask #6).
     full_ext = os.environ.get("SPARK_GRAFT_BENCH_FULL") == "1"
@@ -734,7 +768,7 @@ def main() -> None:
             "calibration_streaming": calibration_streaming,
             "regressions_normalized": regressions_norm,
             "fixture_fingerprint": fixture_fp,
-            "n_same_generation_records": n_same_gen,
+            **floors.record_fields(),
             "sf": sf,
         }
     )

@@ -687,8 +687,12 @@ def label_propagation(
     tiebreak exactly, and unlike the node-keyed row_number window it
     partial-aggregates map-side and needs no per-partition sort (guide
     §2.3/§2.4; r16: 8.54 -> 7.31 s interleaved min-of-3 at sf0.1,
-    outputs identical).  Only the node-sized label vector moves between
-    rounds.  Returns (node, community).  Nodes absent from ``adj``
+    outputs identical).  Neither struct field can be NULL, so the
+    NULL-first ordering of ``min(struct)`` never decides the pick:
+    ``cnt`` is a count, and a label reaches ``cnt`` only through the
+    equi-join on ``nbr_col``, which drops NULL keys (a NULL node still
+    gets a neighbor's label).  Only the node-sized label vector moves
+    between rounds.  Returns (node, community).  Nodes absent from ``adj``
     don't appear (isolated nodes are their own community by definition;
     left-join back if needed)."""
     if iters < 1:
@@ -936,11 +940,14 @@ def keep_best(
     ``pairs`` (connected components), give singletons their own
     component, score quality, and keep the HIGHEST-QUALITY member per
     component (``id_col`` tiebreak).  The per-component argmax is an
-    AGGREGATE — ``min(struct(-quality, id, quality))`` realizes the
-    (quality DESC, id ASC) pick exactly (quality_score is never
-    NULL/NaN: bounded arithmetic with an explicit <=0 branch), and
-    unlike a row_number window it partial-aggregates map-side with no
-    per-partition sort (guide §2.3; r16 rewrite, outputs identical).
+    AGGREGATE — ``min(struct(isnull(quality), -quality, id, quality))``
+    realizes the (quality DESC NULLS LAST, id ASC) pick of the oracle's
+    row_number window exactly, and unlike that window it
+    partial-aggregates map-side with no per-partition sort (guide §2.3).
+    quality_score is NULL for a NULL text, and a struct orders a NULL
+    field FIRST, so the leading null flag is what keeps a NULL-text
+    document from beating a scored member of its component; a component
+    of NULL-scored documents only keeps its lowest id.
     Output: (doc_id, component, quality_score) of the kept documents."""
     from .text import quality_score
 
@@ -959,6 +966,7 @@ def keep_best(
         .agg(
             F.min(
                 F.struct(
+                    F.isnull("quality_score").alias("nullq"),
                     (-F.col("quality_score")).alias("negq"),
                     F.col(id_col).alias("kid"),
                     F.col("quality_score").alias("q"),

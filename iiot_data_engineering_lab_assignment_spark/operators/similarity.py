@@ -10,6 +10,8 @@ of files.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -174,8 +176,6 @@ def ivf_topk(
     shape: the quantizer is trained once at ingest, and each query costs
     only the probe-cell scan.
     """
-    import math as _math
-
     if cents is None:
         rows = centroids(embeddings, cell_col, emb_col).collect()
         by_cell: dict = {}
@@ -183,11 +183,11 @@ def ivf_topk(
             by_cell.setdefault(r[cell_col], [0.0] * len(query))[r["pos"]] = r["centroid_v"]
     else:
         by_cell = cents
-    qn = _math.sqrt(sum(x * x for x in query))
+    qn = math.sqrt(sum(x * x for x in query))
 
     def cell_cos(v: list[float]) -> float:
         dotp = sum(a * b for a, b in zip(v, query))
-        n = _math.sqrt(sum(a * a for a in v))
+        n = math.sqrt(sum(a * a for a in v))
         return dotp / (n * qn) if n else -1.0
 
     # deterministic tiebreak on the cell id: by_cell is dict-ordered by an
@@ -1110,8 +1110,15 @@ def pq_codebook_train(
 def _dbl(x: float) -> str:
     """SQL double literal with exact round-trip value: repr() is the
     shortest digits that reparse to the same IEEE double, and the 'D'
-    suffix keeps the parser from typing plain decimals as DECIMAL."""
-    return f"{float(x)!r}D"
+    suffix keeps the parser from typing plain decimals as DECIMAL.
+    NaN and +-Inf have no literal form (``nanD`` / ``infD`` do not
+    parse), so they render as casts from Spark's special strings."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return f"CAST('{'' if x > 0 else '-'}Infinity' AS DOUBLE)"
+    return f"{x!r}D"
 
 
 def _pq_assign_sql(

@@ -19,6 +19,25 @@ engine itself:
   ns->microsecond TimestampType when needed, so downstream plans always
   see a plain timestamp column and row-group min/max skipping applies
   on either layout.
+* ``spark.sql.codegen.cache.maxEntries`` = :data:`CODEGEN_CACHE_ENTRIES`
+  (Spark's default is 100).  Spark caches the classes Janino compiles for
+  whole-stage pipelines, projections and predicates in one JVM-wide LRU
+  cache keyed by the generated source; a class evicted before its query
+  comes back is generated and compiled again (and starts cold in the JIT).
+  The constant is sized to the measured working set of generated classes,
+  not guessed: the 13-query analyst mix of ``perfbench`` (12 registered
+  analyst queries plus ``dedup_keep_best``) needs about 230 classes
+  (227 at sf0.001), so at 100 entries every round of the mix re-ran
+  370-380 Janino compilations (0 at this size); one ``iiot_nightly``
+  pass plus its checks needs 72; all 288 registered queries in one
+  session at sf0.001 need at least 3,645.
+  4096 covers the whole registered surface, so the test suite and the
+  oracle gate stop evicting too.  ``tools/check_oracles.py`` prints the
+  compilations of a full run, which re-measures the surface's working set.
+  The setting is static and JVM-wide: it applies only when ``get_spark``
+  starts the SparkContext.  A session built elsewhere (a caller's own
+  vanilla ``SparkSession.builder`` session, for one) keeps Spark's 100
+  entries.
 
 Delta Lake is the intended lake format at deployment (the reference writes
 Delta 2.4, timescale_to_deltalake.py:33-37); the runtime here has no
@@ -36,7 +55,10 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark", "scratch_dir"]
+__all__ = ["get_spark", "stop_spark", "scratch_dir", "CODEGEN_CACHE_ENTRIES"]
+
+#: Entries of Spark's generated-class cache; see the module docstring.
+CODEGEN_CACHE_ENTRIES = 4096
 
 _SCRATCH_ROOT: str | None = None
 
@@ -108,6 +130,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if _delta_available():
         b = b.config(

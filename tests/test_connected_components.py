@@ -82,6 +82,33 @@ def test_label_propagation_deterministic_under_repartition(spark):
     assert a == b and len(a) == 30
 
 
+def test_label_propagation_null_endpoints_never_win(spark):
+    """The argmax is ``min(struct(-cnt, lab))``, and a struct orders a
+    NULL field first: a NULL label reaching the pick would win every
+    node it touches.  Edges with a NULL endpoint must leave the other
+    nodes' communities as they are without them, and no node may end up
+    in a NULL community."""
+    from iiot_data_engineering_lab_assignment_spark.operators.dedup import label_propagation
+
+    edges = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12)]
+    rows = [(a, b) for a, b in edges] + [(b, a) for a, b in edges]
+    clean = {
+        r["node"]: r["community"]
+        for r in label_propagation(
+            spark.createDataFrame(rows, "node long, nbr long"), iters=3
+        ).collect()
+    }
+    dirty = {
+        r["node"]: r["community"]
+        for r in label_propagation(
+            spark.createDataFrame(rows + [(1, None), (None, 1)], "node long, nbr long"),
+            iters=3,
+        ).collect()
+    }
+    assert None not in dirty.values()
+    assert {k: v for k, v in dirty.items() if k is not None} == clean
+
+
 def test_label_propagation_rejects_bad_iters(spark):
     from iiot_data_engineering_lab_assignment_spark.operators.dedup import label_propagation
 

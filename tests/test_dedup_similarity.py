@@ -120,6 +120,61 @@ def test_dedup_keep_best_prefers_quality_over_id(spark):
     assert kept == {2, 3}  # doc 2 beats its lower-id near-dup on quality
 
 
+def test_keep_best_null_quality_never_wins(spark):
+    """A NULL text scores NULL quality.  In a component of one scored and
+    one NULL-text document, keep_best keeps the scored one, as the
+    registry oracle's ``ORDER BY quality_score DESC`` does (DuckDB puts
+    NULLs last); ``min(struct(-quality, ...))`` alone ordered the NULL
+    first and kept it.  A component of NULL-scored documents keeps its
+    lowest id, the oracle's tiebreak."""
+    import duckdb
+
+    from iiot_data_engineering_lab_assignment_spark import registry
+    from iiot_data_engineering_lab_assignment_spark.operators.dedup import keep_best
+    from iiot_data_engineering_lab_assignment_spark.operators.text import quality_score
+
+    scored = " ".join(f"w{i}" for i in range(50))
+    docs = spark.createDataFrame(
+        # doc 1 (NULL) sorts before doc 2 on id, so only quality can pick 2
+        [(1, None), (2, scored), (5, None), (6, None), (9, scored)],
+        "doc_id long, text string",
+    )
+    pairs = spark.createDataFrame([(1, 2), (5, 6)], "doc_a long, doc_b long")
+    got = sorted(map(tuple, keep_best(docs, pairs).collect()))
+
+    # the oracle's selection step over the same components and scores
+    oracle = registry.QUERIES["dedup_keep_best"].oracle
+    ranked = "WITH " + oracle[oracle.index("ranked AS (") :]
+    con = duckdb.connect()
+    con.sql(
+        "CREATE TABLE allc AS SELECT * FROM (VALUES (1, 1), (2, 1), (5, 5), "
+        "(6, 5), (9, 9)) t(doc_id, component)"
+    )
+    con.sql("CREATE TABLE q (doc_id BIGINT, quality_score DOUBLE)")
+    con.executemany(
+        "INSERT INTO q VALUES (?, ?)",
+        [tuple(r) for r in quality_score(docs).select("doc_id", "quality_score").collect()],
+    )
+    want = sorted(con.sql(ranked).fetchall())
+    assert got == want
+    assert [r[0] for r in got] == [2, 5, 9]
+    assert got[1][2] is None
+
+
+def test_dbl_literals_round_trip_through_spark_sql(spark):
+    """Codebook and centroid values are inlined as SQL double literals;
+    every IEEE double, NaN and +-Inf included, must parse back to itself."""
+    from iiot_data_engineering_lab_assignment_spark.operators.similarity import _dbl
+
+    vals = [0.1, -2.5e-300, 1e308, 5e-324, float("nan"), float("inf"), float("-inf")]
+    row = spark.sql("SELECT " + ", ".join(_dbl(v) for v in vals)).first()
+    assert [f.dataType.simpleString() for f in spark.sql(f"SELECT {_dbl(1.0)}").schema] == [
+        "double"
+    ]
+    for v, got in zip(vals, row):
+        assert (math.isnan(v) and math.isnan(got)) or got == v
+
+
 def test_fuzzy_block_join_matches_small_edits(spark):
     """The record-linkage tier catches in-place edits the shingle tiers
     under-score; blocking means a changed PREFIX is a (documented) block

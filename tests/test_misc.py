@@ -249,3 +249,28 @@ def test_bench_query_names_are_registered():
     assert len(set(bench.HEADLINE + bench.EXTENDED)) == len(
         bench.HEADLINE + bench.EXTENDED
     )
+
+
+def test_bench_record_says_when_flags_are_disarmed(tmp_path, capsys):
+    """The regression flags compare only records of the current fixture
+    generation; with none committed they are all off.  The bench record
+    carries that as ``flags_armed``, next to the stderr note."""
+    import json
+
+    import bench
+
+    rec = tmp_path / "BENCH_local_r01.json"
+    rec.write_text(
+        json.dumps(
+            {"queries": {"q1": 2.0}, "calibration": 1.0, "fixture_fingerprint": "gen-a"}
+        )
+    )
+    other = bench._load_floors([str(rec)], "gen-b", 1.0, 1.0)
+    assert other.record_fields() == {"n_same_generation_records": 0, "flags_armed": False}
+    assert other.floor == {} and other.cost == {"q1": 2.0}
+    assert "BENCH FLOORS: no committed record matches" in capsys.readouterr().err
+
+    same = bench._load_floors([str(rec)], "gen-a", 2.0, 1.0)
+    assert same.record_fields() == {"n_same_generation_records": 1, "flags_armed": True}
+    assert same.floor == {"q1": 2.0} and same.norm_floor == {"q1": 4.0}
+    assert capsys.readouterr().err == ""

@@ -3,6 +3,10 @@ query through Spark AND its DuckDB oracle, compare row count, column set,
 and order-insensitive values.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
+
+The last line counts the Janino compilations of the run.  While the
+session's generated-class cache holds every class the run needs, that
+count is the working set that sizes ``session.CODEGEN_CACHE_ENTRIES``.
 """
 
 from __future__ import annotations
@@ -15,7 +19,7 @@ import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from iiot_data_engineering_lab_assignment_spark import registry  # noqa: E402
 from iiot_data_engineering_lab_assignment_spark.schemas import FIXTURE_TABLES  # noqa: E402
@@ -56,6 +60,8 @@ def main() -> int:
         )
     else:
         spark = get_spark("oracle-check")
+    compilations = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    compiled_before = compilations.getCount()
     con = duckdb.connect()
     for t in FIXTURE_TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -123,6 +129,11 @@ def main() -> int:
             failures.append(name)
 
     print(f"\n{len(failures)} failures: {failures}" if failures else "\nALL PASS")
+    cache = spark.conf.get("spark.sql.codegen.cache.maxEntries")
+    print(
+        f"{compilations.getCount() - compiled_before} Janino compilations "
+        f"(generated-class cache: {cache} entries)"
+    )
     return 1 if failures else 0
 
 
